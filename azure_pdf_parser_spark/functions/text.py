@@ -442,7 +442,6 @@ def language_sql(text_sql: str) -> str:
 # variants are real per-language text — built ONLY from the language's
 # own LANGID_WIDE_SENTENCES sentence plus a bounded contaminant — so
 # the accuracy rows measure the DETECTOR at document granularity.
-LANGID_DOC_VARIANTS = ("sentence", "repeat", "head4", "mixed")
 
 
 def langid_doc_variants() -> list[tuple[str, str, str]]:
@@ -571,8 +570,9 @@ def repetition_stats(documents: "DataFrame") -> "DataFrame":  # noqa: F821
     )
 
 
-REPETITION_STATS_SQL = """
-WITH grams AS (
+# per-doc bigram counts: the grams CTE body of REPETITION_STATS_SQL,
+# shared with the Gopher filter's oracle (_gopher_sql)
+_BIGRAM_COUNTS_SQL = """
     SELECT doc_id, bigram, count(*) AS c FROM (
         SELECT d.doc_id,
                CASE WHEN len(w.words) < 2 THEN d.text
@@ -588,7 +588,12 @@ WITH grams AS (
         ) t
         WHERE d.text IS NOT NULL
     ) GROUP BY doc_id, bigram
-)
+"""
+
+REPETITION_STATS_SQL = (
+    "\nWITH grams AS ("
+    + _BIGRAM_COUNTS_SQL
+    + """)
 SELECT doc_id,
        CAST(sum(c) AS BIGINT) AS n_bigrams,
        CAST(count(*) AS BIGINT) AS n_distinct_bigrams,
@@ -596,6 +601,7 @@ SELECT doc_id,
        round(max(c) / CAST(sum(c) AS DOUBLE), 6) AS top_bigram_ratio
 FROM grams GROUP BY doc_id
 """
+)
 
 
 def vocab_topk(documents: "DataFrame", k: int = 100) -> "DataFrame":  # noqa: F821
@@ -740,9 +746,8 @@ def _gopher_sql() -> str:
         f"'\\b({'|'.join(words)})\\b', 1))"
         for words in LANG_STOPWORDS.values()
     )
-    grams = REPETITION_STATS_SQL.split("grams AS (", 1)[1].rsplit(")\nSELECT", 1)[0]
     return f"""
-WITH grams AS ({grams}),
+WITH grams AS ({_BIGRAM_COUNTS_SQL}),
 rep AS (
     SELECT doc_id, round(max(c) / CAST(sum(c) AS DOUBLE), 6) AS top_bigram_ratio
     FROM grams GROUP BY doc_id

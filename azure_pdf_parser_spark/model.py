@@ -413,19 +413,3 @@ def extract_spans_doc(spans: list[dict]) -> dict:
         "translated": False,
         "status": "ok",
     }
-
-
-def doc_languages_from_spans(
-    spans: list[dict], min_proportion: float = 0.4
-) -> list[str]:
-    """Oracle of operators/extract_spans.doc_languages (O14 semantics:
-    denominator = ALL text-bearing kept spans, detected or not)."""
-    kept = extract_spans_doc(spans)["spans"]
-    blocks = [s["text"] for s in kept if s["text"] is not None]
-    votes = [detect_language(t) for t in blocks]
-    if not votes or all(v is None for v in votes):
-        return []
-    counter = Counter(v for v in votes if v is not None)
-    return sorted(
-        lang for lang, c in counter.items() if c / len(votes) > min_proportion
-    )

@@ -626,12 +626,6 @@ def embedding_near_dup_pairs(
 
 # --- DuckDB oracles ----------------------------------------------------------
 
-_DOT_SQL = """
-(SELECT sum(x * y) FROM (
-    SELECT UNNEST(CAST({a} AS DOUBLE[])) AS x, UNNEST(CAST({b} AS DOUBLE[])) AS y
-))
-"""
-
 COSINE_TOPK_SQL = """
 WITH base AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec,

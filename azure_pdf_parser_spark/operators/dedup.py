@@ -519,7 +519,9 @@ def _minhash_sql_aggs() -> str:
     )
 
 
-MINHASH_LSH_SQL = (
+# the WITH-prefix (shingles → sig → bands) shared by the LSH pair query
+# and the candidate-pair CTEs below
+_MINHASH_BANDS_CTES = (
     "WITH "
     + SHINGLES_SQL_CTE
     + f""",
@@ -537,7 +539,12 @@ bands AS (
     UNION ALL
     SELECT doc_id, 3, md5(CAST(mh_12 AS VARCHAR) || ',' || CAST(mh_13 AS VARCHAR) || ',' || CAST(mh_14 AS VARCHAR) || ',' || CAST(mh_15 AS VARCHAR)) FROM sig
 )
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+"""
+)
+
+MINHASH_LSH_SQL = (
+    _MINHASH_BANDS_CTES
+    + """SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bands a JOIN bands b
   ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
 """
@@ -557,7 +564,7 @@ GROUP BY p.doc_id, x.doc_id
 """
 )
 
-_MINHASH_CAND_CTES = MINHASH_LSH_SQL.rsplit("SELECT DISTINCT", 1)[0] + """,
+_MINHASH_CAND_CTES = _MINHASH_BANDS_CTES + """,
 cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands a JOIN bands b
@@ -724,10 +731,6 @@ FROM nibbles GROUP BY doc_id
 
 
 # --- SimHash hamming near-dup pairs ------------------------------------------
-
-# popcount lookup for a 4-bit nibble: POPCOUNT_NIBBLE[v] = bits set in v
-_POPCOUNT_NIBBLE = "0112122312232334"
-
 
 def _words_expr(sim) -> list:
     """The 8 16-bit words of a 32-nibble hex fingerprint as int columns

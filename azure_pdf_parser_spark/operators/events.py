@@ -199,7 +199,9 @@ ASOF LEFT JOIN purchases p
 """
 
 
-SESSIONIZE_SQL = """
+# the WITH-prefix (flagged → sessions) shared with the session-window
+# and stateful-session oracles in plans/queries.py
+SESSIONIZE_SQL_CTES = """
 WITH flagged AS (
     SELECT user_id, event_id, ts, value,
            CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
@@ -216,13 +218,18 @@ sessions AS (
            ) AS INT) AS session_idx
     FROM flagged
 )
-SELECT user_id, session_idx,
+""".format(gap=SESSION_GAP_SECONDS)
+
+SESSIONIZE_SQL = (
+    SESSIONIZE_SQL_CTES
+    + """SELECT user_id, session_idx,
        strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
        CAST(count(*) AS BIGINT) AS n_events,
        round(sum(value), 6) AS total_value
 FROM sessions
 GROUP BY user_id, session_idx
-""".format(gap=SESSION_GAP_SECONDS)
+"""
+)
 
 
 # --- Batch interval (range) join ----------------------------------------------

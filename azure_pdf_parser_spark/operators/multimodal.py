@@ -278,16 +278,19 @@ def media_exact_dedup(media: DataFrame) -> DataFrame:
 
     One row per distinct payload:
     ``(canonical_media_ref = min ref, n_copies, bytes_total)``.
-    Grouping key is ``md5(content)`` — md5-uniform, so the single
-    shuffle is skew-free and the aggregation is map-side partial
-    (plan-pinned). The oracle cannot hash blobs (DuckDB md5 is
-    VARCHAR-only), but the synth PNG payload is a pure function of two
-    hash nibbles, so it predicts the identical clustering by nibble
-    pair and the compared rows prove the partition."""
+    Rows with NULL ``content`` have no payload to compare, so they are
+    dropped before grouping: they are copies of nothing. Grouping key
+    is ``md5(content)`` — md5-uniform, so the single shuffle is
+    skew-free and the aggregation is map-side partial (plan-pinned).
+    The oracle cannot hash blobs (DuckDB md5 is VARCHAR-only), but the
+    synth PNG payload is a pure function of two hash nibbles, so it
+    predicts the identical clustering by nibble pair and the compared
+    rows prove the partition."""
     from pyspark.sql import functions as F
 
     return (
-        media.groupBy(F.md5("content").alias("content_md5"))
+        media.where(F.col("content").isNotNull())
+        .groupBy(F.md5("content").alias("content_md5"))
         .agg(
             F.min("media_ref").alias("canonical_media_ref"),
             F.count("*").cast("bigint").alias("n_copies"),

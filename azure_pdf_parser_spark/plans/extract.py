@@ -2,17 +2,21 @@
 
     read documents (doc_id, spans)
       → resume anti-join (skip docs already done)           [manifest.py]
-      → size-bucket + salt repartition (compute-skew break)
+      → doc_id hash repartition + size bucket (compute-skew break)
       → main-content extraction                             [extract_spans.py]
-      → write parser_output + append manifest
+      → write parser_output → manifest from the rows written → commit
 
 Skew handling (north_rule): AQE only re-plans *shuffle* skew; the cost
 of the extraction expressions scales with the byte-size of the spans
 array, which AQE cannot see. So the pipeline repartitions explicitly on
-(size_bucket, salt): every task gets a bounded mix of monster and tiny
-documents. This mirrors the reference's own insight — it splits big PDFs
-into ≤50-page batches so no single request owns a monster
-(reference utils.py:117-163).
+the doc id: every task gets a bounded mix of monster and tiny documents.
+This mirrors the reference's own insight — it splits big PDFs into
+≤50-page batches so no single request owns a monster (reference
+utils.py:117-163).
+
+One pass per run: the extraction plan executes once, in the output
+write. The manifest is built from a read-back of the rows that write
+produced, never by running the plan again (see :func:`run_extract`).
 """
 
 from __future__ import annotations
@@ -24,12 +28,13 @@ from pyspark.sql import functions as F
 
 from azure_pdf_parser_spark.operators.extract_spans import extract
 from azure_pdf_parser_spark.plans import manifest as mf
+from azure_pdf_parser_spark.sinks.table_format import ParquetDirFormat
+from azure_pdf_parser_spark.sources.spanize import derive_spans
 
 # bucket boundaries on the serialized size of the spans payload (bytes of
 # text; media refs are pointers). Tuned so the largest bucket's rows are
 # each a bounded unit of work.
 BUCKET_BOUNDS = [1_000, 10_000, 100_000, 1_000_000]
-SALT_BUCKETS = 16
 
 
 def size_bucket_col(spans) -> "F.Column":
@@ -54,25 +59,19 @@ def with_skew_partitioning(
     num_partitions: int | None = None,
     repartition: bool = True,
 ) -> DataFrame:
-    """Add (bucket, salt) lineage columns and hash-repartition on the
+    """Add the ``bucket`` lineage column (payload-byte size class, for
+    the manifest and per-bucket metrics) and hash-repartition on the
     doc id so heavy docs spread evenly.
 
-    The repartition key is the doc_id itself — for unique keys that IS
-    the finest possible salt: every row is its own shuffle key, so
-    monster docs scatter uniformly (balls-into-bins at doc granularity)
-    regardless of how many land in the same size bucket. An earlier
-    design repartitioned on (bucket, 16-way salt), which collapses each
-    bucket to ≤16 distinct keys: hash collisions then pile monsters
-    onto a few tasks and leave most of the cluster idle for the heavy
-    bucket (caught by test_skew_partitioning_spreads_monster_docs).
-
-    ``bucket`` (payload-byte size class) and ``salt`` (the doc's shuffle
-    cell, recorded mod SALT_BUCKETS) stay as columns for manifest
-    lineage and per-partition metrics.
+    The repartition key is the doc_id itself: for unique keys every row
+    is its own shuffle key, so monster docs scatter uniformly
+    (balls-into-bins at doc granularity) regardless of how many land in
+    the same size bucket. Keying on the bucket plus a few hash cells
+    instead collapses each bucket to a handful of keys, and hash
+    collisions then pile monsters onto a few tasks (caught by
+    test_skew_partitioning_spreads_monster_docs).
     """
-    df = documents.withColumn("bucket", size_bucket_col(F.col("spans"))).withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(SALT_BUCKETS)).cast("int")
-    )
+    df = documents.withColumn("bucket", size_bucket_col(F.col("spans")))
     if not repartition:
         return df
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
@@ -97,7 +96,6 @@ def run_extract(
     run_id: str | None = None,
     num_partitions: int | None = None,
     spanize: bool = False,
-    output_format=None,
 ) -> str:
     """The full job. Returns the run_id. Restart-safe: docs already
     'done' in the manifest are skipped via left-anti join.
@@ -109,37 +107,45 @@ def run_extract(
     never derives a span at all (measured 3m47s → well under a minute
     on a 5M-doc no-op rerun).
 
-    ``output_format`` is the table-format seam (sinks/table_format.py):
-    default :class:`ParquetDirFormat` keeps the run-scoped-dir + marker
-    commit protocol; an :class:`IcebergFormat` deployment appends one
-    atomic snapshot per run instead (``dest`` then names a catalog
-    table and run scoping becomes the ``run_id`` column, not a dir).
+    The run commits in this order (the protocol of manifest.py's
+    module docstring):
+
+    1. write the extracted rows, each with the ``partition_id`` of the
+       task that wrote it, to the run-scoped ``{output_path}/run_id=
+       {run_id}`` — the only execution of the extraction plan;
+    2. read that directory back with the written schema (no inference
+       job); the manifest selects only its lineage columns, so the scan
+       never decodes the spans;
+    3. append one manifest row per doc read back;
+    4. rename the commit marker, publishing output and manifest rows
+       together. The directory is uncommitted until then, so a crash at
+       any step leaves no half-visible run.
+
+    The manifest therefore lists exactly the docs the output received,
+    with the task that wrote each, even when the input plan is
+    nondeterministic.
     """
-    from azure_pdf_parser_spark.sinks.table_format import ParquetDirFormat
-    from azure_pdf_parser_spark.sources.spanize import derive_spans
-
-    output_format = output_format or ParquetDirFormat()
-
     run_id = run_id or uuid.uuid4().hex[:12]
 
     todo = mf.resume_filter(documents, spark, manifest_path)
     if spanize:
-        # bucket on raw text size pre-derivation (same byte signal)
+        # the shuffle moves the raw rows; the bucket is computed over the
+        # derived spans, after it
         parted = with_skew_partitioning(
-            derive_spans(
-                with_raw_partitioning(todo, num_partitions)
-            ),
+            derive_spans(with_raw_partitioning(todo, num_partitions)),
             num_partitions,
             repartition=False,
         )
     else:
         parted = with_skew_partitioning(todo, num_partitions)
-    extracted = extract(parted, passthrough=("bucket",))
+    extracted = extract(parted, passthrough=("bucket",)).withColumn(
+        "partition_id", F.spark_partition_id()
+    )
 
-    # atomic run commit (manifest.py module docstring): run-scoped output
-    # dir, manifest append, then ONE marker rename publishes both — a
-    # crash at any point leaves no half-visible run
-    output_format.write(extracted, f"{output_path}/run_id={run_id}", mode="error")
-    mf.append_manifest(extracted, manifest_path, run_id)
+    run_dir = f"{output_path}/run_id={run_id}"
+    parquet = ParquetDirFormat()
+    parquet.write(extracted, run_dir, mode="error")
+    written = parquet.read(spark, run_dir, schema=extracted.schema)
+    mf.append_manifest(written, manifest_path, run_id)
     mf.commit_run(manifest_path, run_id)
     return run_id

@@ -13,8 +13,13 @@ not surface half a run. The commit protocol makes the run the unit of
 atomicity:
 
     1. output rows   → ``{output_path}/run_id={run_id}/``   (run-scoped)
-    2. manifest rows → append under ``{manifest_path}``
+    2. manifest rows → built from a read-back of step 1's rows, appended
+                       under ``{manifest_path}``
     3. publish       → single-file rename of ``_commits/{run_id}``
+
+Step 2 reads the files step 1 wrote instead of running the job's plan a
+second time, so the manifest holds exactly the docs the output holds,
+each with the ``partition_id`` of the task that wrote it.
 
 Readers (``completed_doc_ids``, ``read_parser_output``) only see runs
 whose marker exists, so a crash at any point leaves at worst an
@@ -29,10 +34,12 @@ local-fs; swap for the Hadoop FileSystem API off-box.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from azure_pdf_parser_spark.schemas import MANIFEST
 
@@ -72,10 +79,35 @@ def read_parser_output(
     thousands of runs would compact old runs instead.
     """
     runs = committed_run_ids(manifest_path)
-    df = spark.read.parquet(output_path)
+    schema = _written_schema(output_path, runs)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(output_path)
     if not runs:
         return df.where(F.lit(False))
     return df.where(F.col("run_id").cast("string").isin(runs))
+
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _written_schema(output_path: str, runs: list[str]) -> StructType | None:
+    """The Spark schema in the footer of the first data file of a
+    committed run, or None when there is none.
+
+    ``spark.read.parquet`` without a schema launches a one-task job per
+    read to fetch one file's footer (schema merging is off); reading that
+    footer here gives the same schema without the job."""
+    import pyarrow.parquet as pq
+
+    for run_id in runs:
+        d = os.path.join(output_path, f"run_id={run_id}")
+        names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+        for name in names:
+            if name.startswith("part-") and name.endswith(".parquet"):
+                meta = pq.read_metadata(os.path.join(d, name)).metadata or {}
+                if _SPARK_SCHEMA_KEY in meta:
+                    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return None
 
 
 def gc_uncommitted(output_path: str, manifest_path: str) -> list[str]:
@@ -97,27 +129,29 @@ def gc_uncommitted(output_path: str, manifest_path: str) -> list[str]:
     return removed
 
 
-def manifest_rows(extracted: DataFrame, run_id: str) -> DataFrame:
-    """Per-doc lineage rows from an extracted parser_output DataFrame.
+def append_manifest(extracted: DataFrame, manifest_path: str, run_id: str) -> None:
+    """Append one manifest row per doc of an extracted parser_output
+    DataFrame.
 
-    partition_id is captured with spark_partition_id() at write time —
-    the lineage of which task produced each document.
+    ``partition_id`` (and ``bucket``) come from the frame's own column
+    when it has one: run_extract passes the read-back of its run
+    directory, whose ``partition_id`` is the task that wrote each doc.
+    Without the column it is spark_partition_id() of this append's
+    tasks; without ``bucket`` it is NULL.
     """
-    return extracted.select(
+
+    def own(name: str, default: "F.Column") -> "F.Column":
+        return F.col(name) if name in extracted.columns else default
+
+    extracted.select(
         F.lit(run_id).alias("run_id"),
-        F.spark_partition_id().alias("partition_id"),
+        own("partition_id", F.spark_partition_id()).alias("partition_id"),
         "doc_id",
         F.when(F.col("status") == "ok", "done").otherwise("failed").alias("status"),
         F.col("span_count").cast("long").alias("span_count"),
-        (
-            F.col("bucket") if "bucket" in extracted.columns else F.lit(None).cast("string")
-        ).alias("bucket"),
+        own("bucket", F.lit(None).cast("string")).alias("bucket"),
         F.current_timestamp().alias("updated_at"),
-    )
-
-
-def append_manifest(extracted: DataFrame, manifest_path: str, run_id: str) -> None:
-    manifest_rows(extracted, run_id).write.mode("append").parquet(manifest_path)
+    ).write.mode("append").parquet(manifest_path)
 
 
 def completed_doc_ids(spark: SparkSession, manifest_path: str) -> DataFrame | None:

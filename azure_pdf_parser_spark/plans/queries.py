@@ -2248,14 +2248,9 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_ops.sessionize(load_table(spark, sf_dir, "events"))
 
 
-_SESSIONIZE_CTES = events_ops.SESSIONIZE_SQL.rsplit(
-    "SELECT user_id, session_idx,", 1
-)[0]
-
-
 @query(
     "events_session_window",
-    _SESSIONIZE_CTES
+    events_ops.SESSIONIZE_SQL_CTES
     + """
 SELECT user_id,
        strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
@@ -2273,10 +2268,10 @@ def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_ops.sessionize_native(load_table(spark, sf_dir, "events"))
 
 
-# the WITH-prefix of SESSIONIZE_SQL (everything before its final SELECT)
-# + the closed-prefix projection: all sessions minus each user's last
+# the sessionize CTEs + the closed-prefix projection: all sessions
+# minus each user's last
 _STATEFUL_SESSIONS_SQL = (
-    events_ops.SESSIONIZE_SQL.rsplit("SELECT user_id, session_idx,", 1)[0]
+    events_ops.SESSIONIZE_SQL_CTES
     + """
 , agg AS (
     SELECT user_id, session_idx,

@@ -35,13 +35,6 @@ SPAN = StructType(
     ]
 )
 
-DOCUMENTS = StructType(
-    [
-        StructField("doc_id", StringType(), nullable=False),
-        StructField("spans", ArrayType(SPAN)),
-    ]
-)
-
 # Driver-provided flat table /root/testdata/sf*/documents.parquet
 FLAT_DOCUMENTS = StructType(
     [
@@ -132,35 +125,10 @@ LAYOUT_BATCH = StructType(
     ]
 )
 
-# Merged per-document layout (reference: merge_responses, utils.py:81-114 —
-# content/styles/languages/documents deliberately dropped).
-LAYOUT_DOC = StructType(
-    [
-        StructField("doc_id", StringType(), nullable=False),
-        StructField("api_version", StringType()),
-        StructField("model_id", StringType()),
-        StructField("paragraphs", ArrayType(PARAGRAPH)),
-        StructField("tables", ArrayType(TABLE)),
-        StructField("pages", ArrayType(PAGE)),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Output: parser_output (reference: ParserOutput convert.py:302-324;
 # PDFTextBlock convert.py:63-77; PDFPageMetadata convert.py:178-184)
 # ---------------------------------------------------------------------------
-
-TEXT_BLOCK = StructType(
-    [
-        StructField("text_block_id", StringType()),  # pre-filter enumeration idx
-        StructField("type", StringType()),           # role or "Text"/"TableCell"
-        StructField("type_confidence", DoubleType()),
-        StructField("text", StringType()),
-        StructField("language", StringType()),
-        StructField("page_number", IntegerType()),   # 0-based
-        StructField("coords", ArrayType(POINT)),     # ×72 scaled
-    ]
-)
 
 PAGE_METADATA = StructType(
     [

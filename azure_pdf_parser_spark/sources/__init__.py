@@ -1,4 +1,4 @@
 from azure_pdf_parser_spark.sources.tables import load_table, register_tables
-from azure_pdf_parser_spark.sources.spanize import derive_spans, spans_col
+from azure_pdf_parser_spark.sources.spanize import derive_spans
 
-__all__ = ["load_table", "register_tables", "derive_spans", "spans_col"]
+__all__ = ["load_table", "register_tables", "derive_spans"]

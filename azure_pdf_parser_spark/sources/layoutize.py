@@ -124,8 +124,8 @@ def derive_layout_batches(docs: DataFrame) -> DataFrame:
     doc_id = F.col("doc_id")
 
     # staged exactly like spanize.derive_spans: the (chunk, offset)
-    # array materializes once; the single-expression spans_col form
-    # would re-evaluate the chunk aggregate per span element (O(m³))
+    # array materializes once, so the per-span lambda never re-evaluates
+    # the chunk aggregate per element
     from azure_pdf_parser_spark.sources.spanize import (
         chunk_texts_col,
         chunks_with_offsets_col,

@@ -136,20 +136,6 @@ def span_structs_col(doc_id: Column, chunks_off: Column) -> Column:
     return F.transform(F.sequence(F.lit(0), F.size(chunks_off) - 1), one_span)
 
 
-def spans_col(doc_id: Column, text: Column) -> Column:
-    """array<struct<kind,text,media_ref,offset>> derived from a text
-    column — single-expression form.
-
-    WARNING: tests/doc use only. The chunk array here is a nested
-    expression, so ``span_structs_col``'s per-element ``element_at``
-    re-evaluates it PER SPAN — O(m²·chunk cost). On DataFrames always
-    use :func:`derive_spans`, which stages the chunk array as a column
-    (attribute lookups are O(1) per element)."""
-    return span_structs_col(
-        doc_id, chunks_with_offsets_col(chunk_texts_col(text))
-    )
-
-
 SPAN_ARRAY_TYPE = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 

@@ -161,18 +161,68 @@ def test_atomic_commit_crash_between_output_and_manifest(spark):
 
 def test_committed_read_prunes_uncommitted_partitions(spark):
     """read_parser_output's run filter must prune at planning time
-    (PartitionFilters), never scan-then-filter an orphaned run."""
+    (PartitionFilters), never scan-then-filter an orphaned run; and
+    planning the view runs no job (no schema-inference pass), yet gives
+    the schema inference would."""
     from azure_pdf_parser_spark.plans import manifest as mf
     from azure_pdf_parser_spark.plans.extract import run_extract
     from azure_pdf_parser_spark.sources.spanize import derive_spans
     from azure_pdf_parser_spark.sources.tables import load_table
 
     docs = derive_spans(load_table(spark, SF_DIR, "documents")).limit(20)
+    tracker = spark.sparkContext.statusTracker()
     with tempfile.TemporaryDirectory() as tmp:
         out, man = f"{tmp}/out.parquet", f"{tmp}/manifest.parquet"
         run_extract(spark, docs, out, man, run_id="runA")
-        plan = (
-            mf.read_parser_output(spark, out, man)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
+        jobs_before = set(tracker.getJobIdsForGroup())
+        view = mf.read_parser_output(spark, out, man)
+        plan = view._jdf.queryExecution().executedPlan().toString()
+        assert set(tracker.getJobIdsForGroup()) == jobs_before
         assert "PartitionFilters" in plan and "run_id" in plan, plan
+        assert view.schema == spark.read.parquet(out).schema
+
+
+def test_manifest_matches_output_on_nondeterministic_input(spark):
+    """The manifest is built from the rows the output write produced,
+    not from a second execution of the job's plan. An input that
+    changes on every execution (a nondeterministic ~50% filter) must
+    still leave a committed manifest with exactly the committed
+    output's docs, each with the partition_id the output records."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from azure_pdf_parser_spark.plans import manifest as mf
+    from azure_pdf_parser_spark.plans.extract import run_extract
+    from azure_pdf_parser_spark.schemas import MANIFEST
+    from azure_pdf_parser_spark.sources.spanize import derive_spans
+    from azure_pdf_parser_spark.sources.tables import load_table
+
+    coin = F.udf(lambda _: random.random() < 0.5, "boolean").asNondeterministic()
+    docs = derive_spans(load_table(spark, SF_DIR, "documents")).where(
+        coin("doc_id")
+    )
+
+    with tempfile.TemporaryDirectory() as tmp:
+        out, man = f"{tmp}/out.parquet", f"{tmp}/manifest.parquet"
+        run_extract(spark, docs, out, man, run_id="coin")
+        output = mf.read_parser_output(spark, out, man)
+        manifest = (
+            spark.read.schema(MANIFEST)
+            .parquet(man)
+            .where(F.col("run_id").isin(mf.committed_run_ids(man)))
+        )
+
+        out_ids = [r["doc_id"] for r in output.select("doc_id").collect()]
+        man_ids = [r["doc_id"] for r in manifest.select("doc_id").collect()]
+        assert out_ids and len(set(out_ids)) == len(out_ids)
+        assert len(set(man_ids)) == len(man_ids)
+        assert set(man_ids) == set(out_ids)
+
+        def pids(df):
+            return {
+                r["doc_id"]: r["partition_id"]
+                for r in df.select("doc_id", "partition_id").collect()
+            }
+
+        assert pids(manifest) == pids(output)

@@ -173,14 +173,17 @@ def test_media_exact_dedup_clusters_identical_payloads(spark):
     media = spark.createDataFrame(
         [("media://b", "image", bytes([1, 2, 3])),
          ("media://a", "image", bytes([1, 2, 3])),   # same payload
-         ("media://c", "image", bytes([9]))],
+         ("media://c", "image", bytes([9])),
+         ("media://0", "image", None),               # no payload
+         ("media://1", "image", None)],
         "media_ref string, media_type string, content binary",
     )
     got = {
         r["canonical_media_ref"]: (r["n_copies"], r["bytes_total"])
         for r in media_exact_dedup(media).collect()
     }
-    # canonical = min ref; bytes_total sums every copy
+    # canonical = min ref; bytes_total sums every copy; NULL-content
+    # rows are dropped, never clustered as copies of each other
     assert got == {"media://a": (2, 6), "media://c": (1, 1)}
 
 

@@ -50,23 +50,6 @@ def test_parquet_format_respects_explicit_schema(spark, tmp_path):
     assert got.columns == ["id"]  # pruned at the reader, no inference
 
 
-def test_run_extract_through_explicit_parquet_format(spark, tmp_path):
-    """The seam's default path is the pre-seam run_extract behavior."""
-    from azure_pdf_parser_spark.plans.extract import run_extract
-    from azure_pdf_parser_spark.plans.manifest import read_parser_output
-    from azure_pdf_parser_spark.sources.spanize import derive_spans
-    from azure_pdf_parser_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = derive_spans(load_table(spark, SF_DIR, "documents").limit(20))
-    out = str(tmp_path / "out")
-    man = str(tmp_path / "manifest")
-    run_extract(
-        spark, docs, out, man, run_id="seamrun", output_format=ParquetDirFormat()
-    )
-    assert read_parser_output(spark, out, man).count() == 20
-
-
 def test_iceberg_table_name_composition():
     assert iceberg_table_name("prod", "cpr.parser_output") == "prod.cpr.parser_output"
     assert iceberg_table_name("", "cpr.parser_output") == "cpr.parser_output"
