@@ -4,11 +4,11 @@ The reference delegates language detection to ``langdetect`` with a
 pinned seed (reference: src/azure_pdf_parser/experimental_base.py:135-160,
 DetectorFactory.seed=0 at :151-152). langdetect is a Python-only,
 row-at-a-time library — the engine replaces it with a deterministic
-stopword-profile heuristic expressed as pure column expressions, so
+stopword-profile heuristic expressed as pure SQL expressions, so
 language ID runs JVM-side inside whole-stage codegen with zero Python
 cost and identical results on any executor count.
 
-Every function here has a Spark (Column) and a SQL (string) form with
+Every function here has a Spark and a SQL (string) form with
 bit-identical semantics — the SQL form feeds the DuckDB oracle.
 """
 
@@ -48,7 +48,7 @@ def _score(text: Column | str, lang: str) -> Column:
 
 # ---------------------------------------------------------------------------
 # Wide language identification: 59 languages, three bit-identical mirrors
-# (Spark Column / DuckDB SQL / pure Python in model.detect_language).
+# (Spark SQL / DuckDB SQL / pure Python in model.detect_language).
 #
 # The reference delegates to langdetect (~55 languages, pinned seed —
 # experimental_base.py:135-160). The engine replaces it with a
@@ -63,23 +63,27 @@ def _score(text: Column | str, lang: str) -> Column:
 # code (the analog of the reference's seed pinning). No hits → NULL.
 #
 # Cross-engine word boundaries: RE2's \b is ASCII-only, so non-Latin
-# stopwords can't use \b. Instead the text is prepared as
-#   ' ' || double_spaces(strip_non_letters(sample)) || ' '
-# and ONE combined regex over all word profiles' stopwords extracts the
-# space-surrounded stopword tokens — doubling the spaces makes adjacent
-# tokens non-overlapping for the regex scanner. Per-language scores are
-# then array_intersect against each profile (distinct semantics in
-# Spark/DuckDB/Python alike). \p{L} means the same Unicode letter
-# category in Java regex, RE2, and Python's str.isalpha(), which keeps
-# all three mirrors identical (hypothesis-checked, astral included).
+# stopwords can't use \b. Instead every non-letter of the sample
+# becomes a space and the result is split on single spaces; \p{L}
+# means the same Unicode letter category in Java regex, RE2, and
+# Python's str.isalpha() (up to each runtime's Unicode version), which
+# keeps all three mirrors identical (hypothesis-checked, astral
+# included). Per-language word scores are array_intersect against each
+# profile (distinct semantics in Spark/DuckDB/Python alike).
 #
-# Why intersect, not per-word counts: the scores sit in ONE projection
-# per profile. array_intersect is lambda-free, so whole-stage codegen CSE
-# collapses the 24 identical hits/prepared subtrees to one evaluation —
-# measured 1.1 s for 200k docs. A filter(hits, λ)-count formulation
-# re-evaluates the combined scan per language (fresh lambda-variable
-# ids defeat CSE): measured 10.4 s. Per-language full-text regexes:
-# 2.0 s. (Spark 4.1, local[32], sf0.1 ×40.)
+# The Spark form is rendered ONCE, at import, as Spark SQL text from
+# the profile tables (_RANKED_SQL/_PICK_SQL, every constant through _sql_str) and
+# built with F.expr: the JVM parses one string, where the Column API
+# makes one py4j round-trip per node (~5,900 per extract plan, ~1 s of
+# driver time per job at any input size). Catalyst gets the same
+# expressions either way. The scores are lambda-free, so
+# whole-stage codegen CSE evaluates the shared sample/hits subtrees of
+# the inline form once per row — measured 1.1 s for 200k docs, where a
+# filter(hits, λ)-count formulation re-evaluates the combined scan per
+# language (fresh lambda-variable ids defeat CSE): 10.4 s; per-language
+# full-text regexes: 2.0 s (Spark 4.1, local[32], sf0.1 ×40). The
+# staged form (with_language) makes sample/hits/guard/argmax attributes,
+# so the plan carries one copy of each instead of ~70.
 # ---------------------------------------------------------------------------
 
 LANGID_SAMPLE_CHARS = 256
@@ -240,24 +244,20 @@ def _script_pattern(lang: str) -> str:
     return f"[{lo}-{hi}]"
 
 
-def _sample_expr(text: Column) -> Column:
-    return F.substring(text, 1, LANGID_SAMPLE_CHARS)
-
-
-def _tokens_expr(sample: Column) -> Column:
-    """Token array of the cleaned sample: non-letters → space, split on
-    single spaces. Empty-string tokens (from space runs) survive the
-    split but can never equal a profile word, so they are harmless —
-    and both mirrors produce them identically. This replaces the old
-    doubled-space mega-alternation regex scan (230 stopword
-    alternatives × every position of the prepared text dominated the
-    detector after the script-scan fix); one cleaning pass + one split
-    is the whole tokenizer."""
-    cleaned = F.regexp_replace(sample, r"[^\p{L} ]", " ")
-    return F.split(cleaned, " ")
+def _sql_str(s: str) -> str:
+    """Spark SQL string literal that selects back equal to ``s`` — the
+    one quoting rule every constant of the rendered detector goes
+    through: quote and backslash escaped, control characters (the NUL
+    of NON_LATIN_GUARD) written as \\uXXXX escapes."""
+    body = "".join(
+        "\\" + ch if ch in "'\\" else f"\\u{ord(ch):04x}" if ch < " " else ch
+        for ch in s
+    )
+    return f"'{body}'"
 
 
 NON_LATIN_GUARD = "[^\x00-ͯ]"  # any char above U+036F
+_LETTER_CLEANER = r"[^\p{L} ]"  # non-letters → space: the \p{L} strip of every mirror
 
 # Union of every word profile's stopwords (sorted for determinism).
 # Word scores are computed in two stages: hits = tokens ∩ ALL once,
@@ -279,140 +279,143 @@ _ALL_PROFILE_WORDS: tuple[str, ...] = tuple(
 )
 
 
-def _hits_expr(tokens: Column) -> Column:
+def _sql_array(values) -> str:
+    return f"array({', '.join(map(_sql_str, values))})"
+
+
+def _sample_sql(text: str) -> str:
+    return f"substring({text}, 1, {LANGID_SAMPLE_CHARS})"
+
+
+def _tokens_sql(sample: str) -> str:
+    """Token array of the cleaned sample: non-letters → space, split on
+    single spaces. Empty-string tokens (from space runs) survive the
+    split but can never equal a profile word, so they are harmless —
+    and both mirrors produce them identically."""
+    return f"split(regexp_replace({sample}, {_sql_str(_LETTER_CLEANER)}, ' '), ' ')"
+
+
+def _hits_sql(tokens: str) -> str:
     """tokens ∩ ALL_PROFILE_WORDS — the one full-array probe; every
     per-language word score intersects THIS small array instead."""
-    return F.array_intersect(
-        tokens, F.array(*[F.lit(w) for w in _ALL_PROFILE_WORDS])
-    )
+    return f"array_intersect({tokens}, {_sql_array(_ALL_PROFILE_WORDS)})"
 
 
-def _winner_expr(
-    sample: Column, hits: Column, nonlatin: Column | None = None
-) -> Column:
-    """argmax winner from (sample, hits) inputs — see language_expr.
-    ``hits`` is the :func:`_hits_expr` array (tokens ∩ ALL words); the
-    per-language intersects over it are value-identical to intersects
-    over the raw token array (profile ⊆ ALL) but probe a tiny array.
-    When ``sample``/``hits`` are STAGED ATTRIBUTES (with_language),
-    the expensive scans are evaluated once per row no matter where
-    Catalyst inlines this combinator tree — even into an array lambda,
-    where only the cheap attribute-fed intersects would re-run.
+def _nonlatin_sql(sample: str) -> str:
+    return f"regexp_count({sample}, {_sql_str(NON_LATIN_GUARD)})"
 
-    Script scores scan the RAW sample with ``regexp_count``: cleaning
-    only turns non-letters into spaces, which a single-letter script
-    range can never match, so counts over sample and cleaned text are
-    provably identical — and regexp_count allocates no per-match array
-    (the round-3 profile: ~22 script regexp_extract_all scans dominated
-    the 59-profile detector's cost). Word scores are set intersections
-    of the token array with each profile's word list — array_intersect
-    dedups, exactly the Python mirror's set-&-set."""
 
-    # Every script/marker profile lives above U+036F (all are non-Latin
-    # blocks; Cyrillic languages use WORD profiles), so one guard scan
-    # proves all 22 script scores are zero for Latin-only text — the
-    # common case — and codegen's lazy If skips the scans entirely.
-    # Value-identical on every input: NULL sample → NULL guard → the
-    # otherwise(0) branch, and 0 scores yield the same NULL winner as
-    # NULL scores (`s > 0` is false for both; struct-ordering puts NULL
-    # first, so array_max still lands on a zero-score struct).
-    # Callers in interpreted (lambda-adjacent) projections must pass a
-    # STAGED guard column (with_language does) — the inline form below
-    # is duplicated once per script profile and only codegen CSE
-    # collapses the copies.
-    if nonlatin is None:
-        nonlatin = F.regexp_count(sample, F.lit(NON_LATIN_GUARD))
+def _ranked_template() -> str:
+    """The argmax struct ``(s, r)`` — best score, minus its profile
+    index — over ``{sample}``, ``{hits}`` (the :func:`_hits_sql` array)
+    and ``{nl}`` (the :func:`_nonlatin_sql` count); see language_expr.
 
-    def score(lang: str) -> Column:
+    Script scores scan the RAW sample with ``regexp_count`` (no per-match
+    array); the Python and DuckDB mirrors count the raw sample too, so a
+    combining mark or digit inside a script block counts for its script
+    in all three. Word scores are set intersections of ``hits`` with
+    each profile's word list — array_intersect dedups, exactly the
+    Python mirror's set-&-set; over ``hits`` they equal intersects over
+    the raw token array (profile ⊆ ALL) but probe a tiny array.
+
+    Every script/marker profile lives above U+036F (all are non-Latin
+    blocks; Cyrillic languages use WORD profiles), so the ``nl`` guard
+    proves all 24 script scores are zero for Latin-only text — the
+    common case — and codegen's lazy CASE skips the scans entirely.
+    Value-identical on every input: NULL sample → NULL guard → the ELSE
+    0 branch, and 0 scores yield the same NULL winner as NULL scores
+    (`s > 0` is false for both; struct ordering puts NULL first, so
+    array_max still lands on a zero-score struct)."""
+
+    def score(lang: str) -> str:
         kind, payload = LANG_PROFILES[lang]
-        if kind in ("script", "marker_script"):
-            n = F.when(
-                nonlatin > 0,
-                F.regexp_count(sample, F.lit(_script_pattern(lang))),
-            ).otherwise(F.lit(0))
-            return n * MARKER_WEIGHT if kind == "marker_script" else n
-        return F.size(
-            F.array_intersect(hits, F.array(*[F.lit(w) for w in payload]))
-        )
+        if kind == "words":
+            return f"size(array_intersect({{hits}}, {_sql_array(payload)}))"
+        pattern = _sql_str(_script_pattern(lang))
+        n = f"(CASE WHEN {{nl}} > 0 THEN regexp_count({{sample}}, {pattern}) ELSE 0 END)"
+        return f"{n} * {MARKER_WEIGHT}" if kind == "marker_script" else n
 
-    ranked = F.array_max(
-        F.array(
-            *[
-                F.struct(score(lang).alias("s"), F.lit(-i).alias("r"))
-                for i, lang in enumerate(LANG_PROFILES)
-            ]
-        )
+    structs = ", ".join(
+        f"named_struct('s', {score(lang)}, 'r', {-i})"
+        for i, lang in enumerate(LANG_PROFILES)
     )
-    langs = F.array(*[F.lit(lang) for lang in LANG_PROFILES])
-    return F.when(
-        ranked.getField("s") > 0,
-        F.element_at(langs, -ranked.getField("r") + 1),
-    )
+    return f"array_max(array({structs}))"
 
 
-def with_language(df, text: Column, out: str):
-    """Append the detected-language column through STAGED projections.
+_RANKED_SQL = _ranked_template()
+# the winner's code from the ``{rk}`` argmax struct; NULL without signal
+_PICK_SQL = (
+    f"CASE WHEN {{rk}}.s > 0 THEN element_at({_sql_array(LANG_PROFILES)}, -{{rk}}.r + 1) END"
+)
+
+
+def with_language(df, text: str, out: str):
+    """Append the detected-language column ``out`` of column ``text``
+    (any SQL column reference, e.g. ``s.text``) through STAGED
+    projections.
 
     Use this (not a bare :func:`language_expr`) whenever the consuming
-    projection contains array lambdas. Lambda-bearing projections are
-    CodegenFallback: interpreted evaluation has no subexpression
-    elimination, and CollapseProject can inline a staged single-column
-    tree into a lambda body, where it re-evaluates PER ARRAY ELEMENT —
-    measured 38 s vs 2 s on the layout chain at sf0.1. Staging
-    ``_lang_prep``/``_lang_hits`` as real columns makes them attribute
-    references: multi-referenced non-cheap columns survive
-    CollapseProject, so the regex scans run exactly once per row; only
-    the cheap attribute-fed argmax combinators can ever be inlined.
+    projection contains array lambdas, or to keep the plan small.
+    Lambda-bearing projections are CodegenFallback: interpreted
+    evaluation has no subexpression elimination, and CollapseProject can
+    inline a staged single-column tree into a lambda body, where it
+    re-evaluates PER ARRAY ELEMENT — measured 38 s vs 2 s on the layout
+    chain at sf0.1. Staging the sample, ``hits``, guard and argmax as
+    real columns makes them attribute references: multi-referenced
+    non-cheap columns survive CollapseProject, so the regex scans run
+    exactly once per row and the argmax holds one attribute per ``hits``
+    reference instead of a copy of the 193-word intersect. The argmax is
+    staged because codegen CSE never shares a subexpression between a
+    CASE condition and its THEN branch: inline, the winner CASE
+    generates the 59-score argmax twice (327 KB of Java for the flagship
+    plan, 177 KB staged), and compiling it is the detector's main cost
+    on small inputs.
     """
-    smp, hits, nl = f"_{out}_sample", f"_{out}_hits", f"_{out}_nl"
-    df = df.withColumn(smp, _sample_expr(text))
-    df = df.withColumn(hits, _hits_expr(_tokens_expr(F.col(smp))))
-    df = df.withColumn(nl, F.regexp_count(F.col(smp), F.lit(NON_LATIN_GUARD)))
-    df = df.withColumn(
-        out, _winner_expr(F.col(smp), F.col(hits), F.col(nl))
+    smp, hits, nl, rk = (f"_{out}_{s}" for s in ("sample", "hits", "nl", "rank"))
+    df = df.withColumn(smp, F.expr(_sample_sql(text)))
+    df = df.withColumns(
+        {hits: F.expr(_hits_sql(_tokens_sql(smp))), nl: F.expr(_nonlatin_sql(smp))}
     )
-    return df.drop(smp, hits, nl)
+    df = df.withColumn(rk, F.expr(_RANKED_SQL.format(sample=smp, hits=hits, nl=nl)))
+    df = df.withColumn(out, F.expr(_PICK_SQL.format(rk=rk)))
+    return df.drop(smp, hits, nl, rk)
 
 
-def language_expr(text: Column | str) -> Column:
-    """Detected language code (59 languages), or NULL on no signal.
+def language_expr(text: str) -> Column:
+    """Detected language code (59 languages) of column ``text``, or NULL
+    on no signal.
 
     argmax over per-language scores; ties go to the lexicographically
     smallest code. Built so each per-language score expression appears
     EXACTLY ONCE: argmax = array_max over (score, -lang_index) structs
     (struct comparison is field-order lexicographic, so max score wins
-    and ties go to the smallest index), and the winner struct is
-    consumed through a single-element transform() whose lambda variable
-    is a cheap slot reference.
+    and ties go to the smallest index), and the winner is read from
+    that one struct.
 
-    The word-profile scores share one cleaned token array (`tokens`)
-    and intersect it per language — both subtrees are lambda-free, so
-    whole-stage codegen CSE evaluates them once per row even though the
-    tokens tree appears once per word profile (see module header for
-    the measured alternatives).
+    This inline form repeats the sample, ``hits`` and guard subtrees
+    once per score and the whole argmax twice (see with_language): ~70
+    copies of the 193-word intersect. It relies on whole-stage codegen
+    CSE to evaluate the shared subtrees once per row, so the tree must
+    stay lambda-free — one transform() drops the WHOLE projection out of
+    codegen and the copies re-scan per language (measured 15 s vs 3.5 s
+    flagship). Inside a lambda-bearing projection CSE is
+    unavailable — use :func:`with_language` there instead.
+
+    Null-safe winner branch: NULL text gives NULL scores, which tie on
+    the index field inside array_max and would otherwise crown the first
+    language. `s > 0` is false for both NULL and 0 scores, so each
+    yields NULL — matching the SQL form's empty-subquery NULL.
     """
-    # NO lambda anywhere in this tree — higher-order functions are
-    # CodegenFallback, and one transform() here drops the WHOLE
-    # projection out of whole-stage codegen, so the 24 shared `hits`
-    # subtrees stop being CSE'd and get re-scanned per language
-    # (measured 15 s vs 3.5 s flagship). `ranked` referenced twice is
-    # fine: under codegen, CSE evaluates the argmax once. Inside a
-    # lambda-bearing projection CSE is unavailable — use with_language
-    # there instead.
-    #
-    # Null-safe winner branch: NULL text gives NULL scores, which tie on
-    # the index field inside array_max (struct comparison) and would
-    # otherwise crown the first language. `s > 0` is false for both NULL
-    # and 0 scores, so each yields NULL — matching the SQL form's
-    # empty-subquery NULL.
-    c = F.col(text) if isinstance(text, str) else text
-    sample = _sample_expr(c)
-    return _winner_expr(sample, _hits_expr(_tokens_expr(sample)))
+    sample = _sample_sql(text)
+    ranked = _RANKED_SQL.format(
+        sample=sample, hits=_hits_sql(_tokens_sql(sample)), nl=_nonlatin_sql(sample)
+    )
+    return F.expr(_PICK_SQL.format(rk=ranked))
 
 
 def language_sql(text_sql: str) -> str:
     """DuckDB SQL expression with semantics identical to
-    :func:`language_expr`: a correlated scalar subquery ranking the 29
+    :func:`language_expr`: a correlated scalar subquery ranking the 59
     (code, score) rows — max score first, code ASC on ties, NULL when
     every score is 0 or NULL (empty subquery → NULL scalar)."""
     sample = f"substr({text_sql}, 1, {LANGID_SAMPLE_CHARS})"
@@ -423,7 +426,7 @@ def language_sql(text_sql: str) -> str:
     def score(lang: str) -> str:
         kind, payload = LANG_PROFILES[lang]
         if kind in ("script", "marker_script"):
-            # raw sample, not cleaned: identical counts (see _winner_expr)
+            # raw sample, not cleaned, as in _ranked_template
             n = f"len(regexp_extract_all({sample}, '{_script_pattern(lang)}'))"
             return f"({n} * {MARKER_WEIGHT})" if kind == "marker_script" else n
         words = ", ".join(f"'{w}'" for w in payload)

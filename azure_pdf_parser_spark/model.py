@@ -57,7 +57,9 @@ def detect_language(text: Optional[str]) -> Optional[str]:
         return None
     # str.isalpha() is the same Unicode letter category as the \p{L}
     # strip in the Spark/DuckDB mirrors; the sample cap, token-set
-    # intersection, and script char counts mirror them too
+    # intersection, and script char counts mirror them too — script
+    # chars are counted in the RAW sample, as they are there, so a
+    # combining mark or digit inside a script block counts for it
     sample = text[:LANGID_SAMPLE_CHARS]
     cleaned = "".join(ch if ch.isalpha() or ch == " " else " " for ch in sample)
     tokens = set(cleaned.split(" "))
@@ -67,9 +69,9 @@ def detect_language(text: Optional[str]) -> Optional[str]:
     for lang, (kind, payload) in LANG_PROFILES.items():
         if kind == "script":
             lo, hi = payload
-            score = sum(1 for ch in cleaned if lo <= ch <= hi)
+            score = sum(1 for ch in sample if lo <= ch <= hi)
         elif kind == "marker_script":
-            score = sum(1 for ch in cleaned if ch in payload) * MARKER_WEIGHT
+            score = sum(1 for ch in sample if ch in payload) * MARKER_WEIGHT
         else:
             score = len(tokens & set(payload))
         if score > best_score:  # ties keep the earlier (smaller) code

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from azure_pdf_parser_spark.functions.text import language_expr
+from azure_pdf_parser_spark.functions.text import with_language
 from azure_pdf_parser_spark.sources.spanize import is_kept_span
 
 
@@ -58,26 +58,30 @@ def extract(documents: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFram
     ``passthrough`` names extra input columns to carry into the output
     (e.g. the skew bucket, for manifest lineage).
 
-    Staged as three projections on purpose: ``spans`` (the kept array)
-    and ``_doc_text`` are materialized once each, so the final
-    projection is lambda-free — it lands in whole-stage codegen where
-    the language CASE's repeated score references are CSE'd. A single
-    select would inline the higher-order-function tree ~24× (every
-    inlined copy gets fresh lambda-variable ids, which defeats codegen
-    subexpression elimination), re-evaluating the span filter/transform
-    per reference. CollapseProject will not undo the staging: the
-    staged columns are non-cheap and multi-referenced.
+    Staged projections on purpose: ``spans`` (the kept array) and
+    ``_doc_text`` are materialized once each, and the language goes
+    through :func:`with_language`, which stages the detector's sample,
+    word hits, non-Latin guard and argmax as columns too. The language
+    projections are then lambda-free — they land in whole-stage codegen
+    — and the 59-score argmax reads ``hits`` as an attribute instead of
+    inlining ~70 copies of the 193-word intersect. A single select
+    would inline the higher-order-function tree into every
+    language-score reference (each inlined copy gets fresh
+    lambda-variable ids, which defeats codegen subexpression
+    elimination), re-evaluating the span filter/transform per
+    reference. CollapseProject will not undo the staging: the staged
+    columns are non-cheap and multi-referenced.
     """
     kept = kept_spans_col(F.col("spans"))
     staged = documents.select(
         "doc_id", *passthrough, kept.alias("spans")
     ).withColumn("_doc_text", doc_text_col(F.col("spans")))
-    return staged.select(
+    return with_language(staged, "_doc_text", "language").select(
         "doc_id",
         *passthrough,
         "spans",
         F.md5("_doc_text").alias("document_md5_sum"),
-        language_expr(F.col("_doc_text")).alias("language"),
+        "language",
         F.size("spans").cast("bigint").alias("span_count"),
         F.lit(False).alias("translated"),
         F.lit("ok").alias("status"),
@@ -117,8 +121,6 @@ def doc_languages(documents: DataFrame, min_proportion: float = 0.4) -> DataFram
     Array-local implementation: no shuffle — the vote count and the
     proportion filter are higher-order functions over the spans array.
     """
-    from azure_pdf_parser_spark.functions.text import with_language
-
     # Relational, not array-local: a per-span language vote inside an
     # array lambda evaluates the 59-profile detector interpreted per
     # element (lambda projections are CodegenFallback, no CSE) — the
@@ -137,7 +139,7 @@ def doc_languages(documents: DataFrame, min_proportion: float = 0.4) -> DataFram
     ).where(F.col("s").isNotNull() & F.col("s.text").isNotNull())
     from pyspark.sql.window import Window
 
-    votes = with_language(spans, F.col("s.text"), "language").select(
+    votes = with_language(spans, "s.text", "language").select(
         "doc_id", "language"
     )
     # single pass over the votes (a numerator/denominator self-join would

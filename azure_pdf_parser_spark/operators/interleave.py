@@ -438,6 +438,12 @@ def vlm_training_manifest(
     partitioning note), so this plans as a shuffle equi-join on
     ``media_ref`` — md5-uniform keys, no skew, never a broadcast of
     either side and never a nested-loop (plan-pinned).
+
+    Drop rule: the join is INNER, so a caption row whose ``media_ref``
+    has no feature row (e.g. its media parse was quarantined) is not in
+    the manifest. The dropped rows are exactly
+    ``media_caption_pairs(spans_df).join(feats, "media_ref", "left_anti")``
+    — count that to report the loss.
     """
     feats = media_features_df.select(
         "media_ref", "media_type", "format", "width", "height"

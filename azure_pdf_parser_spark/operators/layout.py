@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from azure_pdf_parser_spark.functions.text import language_expr
+from azure_pdf_parser_spark.functions.text import with_language
 
 DIMENSION_CONVERSION_FACTOR = 72  # reference base.py:4
 
@@ -241,8 +241,6 @@ def assemble(
     # measured 38 s vs 2 s for the layout gate at sf0.1). with_language
     # stages the regex scans as multi-referenced attribute columns that
     # survive collapse, pinning them to once per row.
-    from azure_pdf_parser_spark.functions.text import with_language
-
     tagged = with_language(
         tag_table_paragraphs(merged)
         .withColumn("_blocks", text_blocks_col(F.col("paragraphs")))
@@ -252,7 +250,7 @@ def assemble(
                 F.transform(F.col("_blocks"), lambda b: F.trim(b.text)), " "
             ),
         ),
-        F.col("_doc_text"),
+        "_doc_text",
         "_lang_raw",
     ).withColumn(
         "_detected", F.when(F.size("_blocks") > 0, F.col("_lang_raw"))

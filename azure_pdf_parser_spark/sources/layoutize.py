@@ -127,17 +127,16 @@ def derive_layout_batches(docs: DataFrame) -> DataFrame:
     # array materializes once, so the per-span lambda never re-evaluates
     # the chunk aggregate per element
     from azure_pdf_parser_spark.sources.spanize import (
-        chunk_texts_col,
         chunks_with_offsets_col,
         span_structs_col,
     )
 
     base = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        chunks_with_offsets_col(chunk_texts_col(F.col("text"))).alias("_chunks"),
+        chunks_with_offsets_col("text").alias("_chunks"),
     ).select(
         "doc_id",
-        span_structs_col(F.col("doc_id"), F.col("_chunks")).alias("spans"),
+        span_structs_col("doc_id", "_chunks").alias("spans"),
     )
 
     # (ord, kind, text, offset) for non-figure spans, with para_seq rank

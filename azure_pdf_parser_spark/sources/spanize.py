@@ -56,84 +56,71 @@ def is_kept_span(s: Column) -> Column:
     return ~F.coalesce(s.kind, F.lit("Text")).isin(*BOILERPLATE_KINDS)
 
 
-def _kind_expr(h: Column) -> Column:
-    c1, c2 = F.substring(h, 1, 1), F.substring(h, 2, 1)
+def _kind_sql(h: str) -> str:
+    c1, c2 = f"substring({h}, 1, 1)", f"substring({h}, 2, 1)"
     return (
-        F.when(c1 == "a", F.lit("title"))
-        .when(c1 == "b", F.lit("sectionHeading"))
-        .when((c1 == "c") & (c2 < "8"), F.lit("pageHeader"))
-        .when(c1 == "c", F.lit("pageNumber"))
-        .when((c1 == "d") & (c2 < "8"), F.lit("pageFooter"))
-        .when(c1 == "d", F.lit("footnote"))
-        .when(c1 == "e", F.lit("TableCell"))
-        .when(c1 == "f", F.lit("figure"))
-        .otherwise(F.lit("Text"))
+        f"CASE WHEN {c1} = 'a' THEN 'title'"
+        f" WHEN {c1} = 'b' THEN 'sectionHeading'"
+        f" WHEN {c1} = 'c' AND {c2} < '8' THEN 'pageHeader'"
+        f" WHEN {c1} = 'c' THEN 'pageNumber'"
+        f" WHEN {c1} = 'd' AND {c2} < '8' THEN 'pageFooter'"
+        f" WHEN {c1} = 'd' THEN 'footnote'"
+        f" WHEN {c1} = 'e' THEN 'TableCell'"
+        f" WHEN {c1} = 'f' THEN 'figure'"
+        " ELSE 'Text' END"
     )
 
 
-def chunk_texts_col(text: Column) -> Column:
+def _chunk_texts_sql(text: str) -> str:
     """' '-joined 8-word chunks of the text — O(words): each slice copies
     only its own 8-element window."""
-    words = F.split(text, " ")
-    n_chunks = F.ceil(F.size(words) / F.lit(float(WORDS_PER_SPAN))).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(
-            F.slice(words, i * WORDS_PER_SPAN + 1, WORDS_PER_SPAN), " "
-        ),
+    words = f"split({text}, ' ')"
+    n_chunks = f"CAST(ceil(size({words}) / {float(WORDS_PER_SPAN)}D) AS INT)"
+    return (
+        f"transform(sequence(0, {n_chunks} - 1), i -> array_join("
+        f"slice({words}, i * {WORDS_PER_SPAN} + 1, {WORDS_PER_SPAN}), ' '))"
     )
 
 
-def chunks_with_offsets_col(chunks: Column) -> Column:
-    """array<struct<text, offset>>: each chunk paired with the char
-    offset of its first word — running sum of (len(chunk) + 1 separator)
-    via the aggregate accumulator, O(chunks²) int-struct copies. (Two
-    earlier formulations were pathological: re-joining the whole word
-    prefix per chunk is O(words²) STRING churn — ~60 GB of intermediate
-    strings on 240 KB docs — and staging the offsets as their own
-    single-use column gets re-inlined by CollapseProject into the
-    per-span lambda, going O(chunks³).)"""
+def chunks_with_offsets_col(text: str) -> Column:
+    """array<struct<text, offset>> over column ``text``: each 8-word
+    chunk paired with the char offset of its first word — running sum of
+    (len(chunk) + 1 separator) via the aggregate accumulator, O(chunks²)
+    int-struct copies. (Two earlier formulations were pathological:
+    re-joining the whole word prefix per chunk is O(words²) STRING churn
+    — ~60 GB of intermediate strings on 240 KB docs — and staging the
+    offsets as their own single-use column gets re-inlined by
+    CollapseProject into the per-span lambda, going O(chunks³).)"""
     elem = "struct<text:string,offset:int>"
-    return F.aggregate(
-        chunks,
-        F.struct(
-            F.array().cast(f"array<{elem}>").alias("arr"),
-            F.lit(0).cast("int").alias("acc"),
-        ),
-        lambda st, c: F.struct(
-            F.concat(
-                st.arr,
-                F.array(
-                    F.struct(c.alias("text"), st.acc.alias("offset"))
-                ),
-            ).alias("arr"),
-            (st.acc + F.length(c) + 1).cast("int").alias("acc"),
-        ),
-        lambda st: st.arr,
+    return F.expr(
+        f"aggregate({_chunk_texts_sql(text)},"
+        f" named_struct('arr', CAST(array() AS array<{elem}>), 'acc', CAST(0 AS INT)),"
+        " (st, c) -> named_struct("
+        "'arr', concat(st.arr, array(named_struct('text', c, 'offset', st.acc))),"
+        " 'acc', CAST(st.acc + length(c) + 1 AS INT)),"
+        " st -> st.arr)"
     )
 
 
-def span_structs_col(doc_id: Column, chunks_off: Column) -> Column:
-    """Assemble span structs from the pre-staged (text, offset) array.
-    ``chunks_off`` must be a materialized column referenced ≥2 times
-    (element_at + the size bound below keep it so) — an expression
+def _span_structs_sql(doc_id: str, chunks_off: str) -> str:
+    h = f"md5(concat(CAST({doc_id} AS STRING), ':', CAST(i AS STRING)))"
+    kind = _kind_sql(h)
+    chunk = f"element_at({chunks_off}, i + 1)"
+    return (
+        f"transform(sequence(0, size({chunks_off}) - 1), i -> named_struct("
+        f"'kind', {kind},"
+        f" 'text', CASE WHEN {kind} = 'figure' THEN CAST(NULL AS STRING) ELSE {chunk}.text END,"
+        f" 'media_ref', CASE WHEN {kind} = 'figure' THEN concat('media://', {h}) END,"
+        f" 'offset', {chunk}.`offset`))"
+    )
+
+
+def span_structs_col(doc_id: str, chunks_off: str) -> Column:
+    """Assemble span structs from the pre-staged (text, offset) array
+    column ``chunks_off``. It must be a materialized column referenced
+    ≥2 times (element_at + the size bound keep it so) — an expression
     inlined here would re-evaluate per element."""
-
-    def one_span(i: Column) -> Column:
-        h = F.md5(F.concat(doc_id.cast("string"), F.lit(":"), i.cast("string")))
-        kind = _kind_expr(h)
-        is_media = kind == "figure"
-        chunk = F.element_at(chunks_off, i + 1)
-        return F.struct(
-            kind.alias("kind"),
-            F.when(is_media, F.lit(None).cast("string"))
-            .otherwise(chunk.text)
-            .alias("text"),
-            F.when(is_media, F.concat(F.lit("media://"), h)).alias("media_ref"),
-            chunk.offset.alias("offset"),
-        )
-
-    return F.transform(F.sequence(F.lit(0), F.size(chunks_off) - 1), one_span)
+    return F.expr(_span_structs_sql(doc_id, chunks_off))
 
 
 SPAN_ARRAY_TYPE = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -151,19 +138,20 @@ def derive_spans(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     Staged projection: the (chunk text, offset) array is materialized
     once, so the per-span assembly lambda does only attribute lookups
     (element_at) — embedding the chunk tree in the lambda would rebuild
-    the whole array per span (O(n²))."""
+    the whole array per span (O(n²)). The expressions are rendered as
+    Spark SQL and parsed JVM-side: a few py4j calls, where the Column
+    API makes one per node (~1,100)."""
     staged = df.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(text_col).isNull().alias("_null_text"),
-        chunks_with_offsets_col(chunk_texts_col(F.col(text_col))).alias(
-            "_chunks"
-        ),
+        chunks_with_offsets_col(text_col).alias("_chunks"),
     )
     return staged.select(
         "doc_id",
-        F.when(F.col("_null_text"), F.array().cast(SPAN_ARRAY_TYPE))
-        .otherwise(span_structs_col(F.col("doc_id"), F.col("_chunks")))
-        .alias("spans"),
+        F.expr(
+            f"CASE WHEN _null_text THEN CAST(array() AS {SPAN_ARRAY_TYPE})"
+            f" ELSE {_span_structs_sql('doc_id', '_chunks')} END"
+        ).alias("spans"),
     )
 
 

@@ -201,6 +201,10 @@ def test_vlm_manifest_joins_captions_to_features(spark):
             ("Text", "cap", None, 0),
             ("figure", None, "media://aa", 1),
         ],
+        "e": [
+            ("Text", "orphan cap", None, 0),
+            ("figure", None, "media://nofeat", 1),  # no feature row
+        ],
     })
     feats = spark.createDataFrame(
         [("media://aa", "image", "png", 160, 16),
@@ -209,6 +213,12 @@ def test_vlm_manifest_joins_captions_to_features(spark):
     )
     rows = vlm_training_manifest(spans, feats).collect()
     assert len(rows) == 1
+    # the documented drop rule: captions without a feature row are absent,
+    # and exactly the left_anti rows of the join are dropped
+    captions = media_caption_pairs(spans)
+    dropped = captions.join(feats, "media_ref", "left_anti")
+    assert [r.media_ref for r in dropped.collect()] == ["media://nofeat"]
+    assert captions.count() - len(rows) == dropped.count() == 1
     r = rows[0].asDict()
     assert r == {
         "media_ref": "media://aa", "doc_id": "d", "ord": 1,

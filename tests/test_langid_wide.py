@@ -10,13 +10,22 @@ engine-vs-engine compare alone can't prove).
 from __future__ import annotations
 
 import duckdb
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from azure_pdf_parser_spark.functions.text import (
+    _ALL_PROFILE_WORDS,
+    _LETTER_CLEANER,
     LANG_PROFILES,
     LANGID_WIDE_SENTENCES,
+    NON_LATIN_GUARD,
+    _script_pattern,
+    _sql_array,
     language_expr,
     language_sql,
+    with_language,
 )
 from azure_pdf_parser_spark.model import detect_language
 from tests.conftest import SF_DIR
@@ -180,3 +189,91 @@ def test_langid_doc_variants_measure_the_detector(spark):
         ("no", "da"), ("pl", "af"), ("pt", "es"), ("sk", "af"),
         ("ur", "fa"),
     }, head4_misses
+
+
+def test_rendered_sql_literals_select_back_equal(spark):
+    """The Spark detector is SQL text: every constant rendered into it
+    must select back through F.expr equal to its Python value — the 193
+    profile words, the 59 codes, the 24 script/marker patterns, the
+    non-Latin guard (its NUL included) and the letter cleaner."""
+    scripts = [
+        _script_pattern(lang)
+        for lang, (kind, _) in LANG_PROFILES.items()
+        if kind != "words"
+    ]
+    assert (len(_ALL_PROFILE_WORDS), len(scripts)) == (193, 24)
+    assert "\x00" in NON_LATIN_GUARD and "\\" in _LETTER_CLEANER
+    hostile = ["'", "\\", "\\u0041", "a'b\\'c", "\x01\x1f"]
+    consts = [
+        *_ALL_PROFILE_WORDS, *LANG_PROFILES, *scripts,
+        NON_LATIN_GUARD, _LETTER_CLEANER, *hostile,
+    ]
+    got = spark.range(1).select(F.expr(_sql_array(consts))).first()[0]
+    assert got == consts
+
+
+@pytest.fixture(scope="module")
+def script_chars(spark):
+    """Every code point of the script blocks and marker sets whose
+    letter category the JVM (\\p{L}) and Python (str.isalpha) agree on.
+    The runtimes carry different Unicode versions (Java 17: 13, Python
+    3.11: 14), so a letter only the newer one knows (U+0C5D, U+0CDD,
+    U+9FFD-U+9FFF here) tokenizes differently in the mirrors — a limit
+    of the runtimes, left out of the draw so the property pins the
+    detector itself."""
+    cps = []
+    for kind, payload in LANG_PROFILES.values():
+        if kind == "script":
+            cps += [chr(c) for c in range(ord(payload[0]), ord(payload[1]) + 1)]
+        elif kind == "marker_script":
+            cps += list(payload)
+    df = spark.createDataFrame([(c,) for c in cps], "ch string")
+    jvm_letter = dict(
+        df.select(
+            "ch", F.regexp_replace("ch", _LETTER_CLEANER, "") == F.col("ch")
+        ).collect()
+    )
+    return [c for c in cps if jvm_letter[c] == c.isalpha()]
+
+
+_SENTENCE_WORDS = sorted(
+    {w for s in LANGID_WIDE_SENTENCES.values() for w in s.split(" ")}
+)
+
+
+def _wide_texts(script_chars):
+    """Texts that reach every profile: tokens drawn from the 59 sample
+    sentences' words, script-block and marker characters (combining
+    marks and digits of the blocks included), quote, backslash and NUL,
+    joined by zero, one or two spaces; long enough to be cut by the
+    256-char sample."""
+    token = st.one_of(
+        st.sampled_from(_SENTENCE_WORDS),
+        st.text(st.sampled_from(script_chars), min_size=1, max_size=4),
+        st.sampled_from(["'", "\\", "\x00"]),
+    )
+    piece = st.tuples(token, st.sampled_from(["", " ", "  "]))
+    text = st.lists(piece, max_size=60).map(
+        lambda ps: "".join(t + sep for t, sep in ps)
+    )
+    return st.lists(st.one_of(st.none(), text), min_size=1, max_size=8)
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(data=st.data())
+def test_spark_forms_agree_with_python_on_wide_texts(spark, script_chars, data):
+    texts = data.draw(_wide_texts(script_chars))
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = {
+        r.id: (r.inline, r.staged)
+        for r in with_language(df, "text", "staged")
+        .select("id", language_expr("text").alias("inline"), "staged")
+        .collect()
+    }
+    for i, t in enumerate(texts):
+        py = detect_language(t)
+        assert got[i] == (py, py), (repr(t)[:80], got[i], py)

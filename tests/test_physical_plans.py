@@ -68,6 +68,38 @@ def test_flagship_extract_has_no_exchange(spark):
     assert plan.count("lambdafunction") <= 12, plan.count("lambdafunction")
 
 
+def test_flagship_plan_builds_in_few_py4j_round_trips(spark, monkeypatch):
+    """Building extract(derive_spans(...)) is driver-side work paid once
+    per job at any input size. The detector and the span derivation are
+    SQL text parsed JVM-side, so building them takes derive_spans 116
+    and extract 536 round-trips (Column by Column they took 1,112 and
+    5,874, ~0.15 ms each). Bounds: ~2× those, 250 and 1,000. Object releases (py4j memory commands) are not
+    counted: they come from Python's garbage collector, not the build."""
+    from py4j import protocol
+
+    from azure_pdf_parser_spark.operators.extract_spans import extract
+    from azure_pdf_parser_spark.sources.spanize import derive_spans
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    extract(derive_spans(docs))  # first build: imports and JVM lookups
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    spans = derive_spans(docs)
+    n_derive = len(calls)
+    extract(spans)
+    n_extract = len(calls) - n_derive
+    monkeypatch.undo()
+    assert n_derive <= 250, n_derive
+    assert n_extract <= 1000, n_extract
+
+
 def test_exploded_extract_has_no_exchange(spark):
     from azure_pdf_parser_spark.operators.extract_spans import extract_exploded
     from azure_pdf_parser_spark.sources.spanize import derive_spans
